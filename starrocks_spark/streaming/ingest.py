@@ -24,6 +24,7 @@ copy-on-write compaction, which is the same logical plan.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import tempfile
@@ -31,6 +32,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from starrocks_spark.tables.storage import part_file_bytes
+
+log = logging.getLogger(__name__)
 
 # Spark's file stream source watches a *directory* (new file = new data,
 # like new Kafka offsets). The testdata tables are single parquet files,
@@ -123,16 +128,23 @@ def state_partitions_for(spark: SparkSession, sf_dir: str,
     via SPARK_GRAFT_STATE_STORE_BYTES), clamped to the cluster's
     parallelism. At sf0.1 (2 MB events) every streaming query gets 1
     store; a 100 TB source gets bytes/100 MB stores capped at the
-    core count."""
+    core count.
+
+    The source's bytes are its part files' (a single parquet file or a
+    Spark-written directory); a path that does not resolve to a local
+    file or directory raises rather than sizing the state as 0 bytes.
+    The inputs and the result are logged."""
     per_store = int(os.environ.get("SPARK_GRAFT_STATE_STORE_BYTES",
                                    str(100 << 20)))
-    try:
-        raw = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        raw = 0
+    path = f"{sf_dir.rstrip('/')}/{table}.parquet"
+    raw = part_file_bytes(path)
     est_state = raw * 4.0 * state_fraction  # parquet→row decompression
     n = max(1, -(-int(est_state) // per_store))  # ceil div
-    return min(n, spark.sparkContext.defaultParallelism)
+    par = spark.sparkContext.defaultParallelism
+    log.info("state stores for %s: %d B x 4.0 x %.3g / %d B per store "
+             "-> %d, capped at parallelism %d", path, raw, state_fraction,
+             per_store, n, par)
+    return min(n, par)
 
 
 def run_stream_to_memory(stream_df: DataFrame, output_mode: str = "complete",

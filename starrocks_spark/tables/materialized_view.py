@@ -35,6 +35,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from starrocks_spark.tables.storage import StoredSchema
+
 
 class MaterializedView:
     """A partition-change-tracked materialized view.
@@ -62,6 +64,7 @@ class MaterializedView:
             scratch_root(), f"sr_mv_{uuid.uuid4().hex[:12]}"
         )
         self._meta_path = self.path + ".meta"
+        self._schema = StoredSchema(partition_col)
 
     # -------------------------------------------------------------- internal
 
@@ -192,6 +195,7 @@ class MaterializedView:
             result = _layout(self.definition(source), len(fp_rows))
             result.write.mode("overwrite") \
                 .partitionBy(self.partition_col).parquet(self.path)
+            self._schema.wrote(result)
             self._write_meta(fp_rows, fp_schema)
             return -1
         if not changed:
@@ -213,6 +217,7 @@ class MaterializedView:
         result.write.mode("overwrite") \
             .option("partitionOverwriteMode", "dynamic") \
             .partitionBy(self.partition_col).parquet(self.path)
+        self._schema.wrote(result)
         removed = self._removed_vs_snapshot(fp_rows, meta_rows)
         if removed:
             self._delete_partitions(removed)
@@ -220,7 +225,7 @@ class MaterializedView:
         return len(changed)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self._schema.scan(self.spark, self.path)
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

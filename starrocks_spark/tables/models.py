@@ -16,16 +16,28 @@ fe/fe-core/.../catalog/OlapTable.java, KeysType):
 
 Spark realization — every mutation is a *declarative DataFrame plan*:
 
-- A table is a parquet directory (optionally partitioned by a column,
-  written with ``partitionBy``), i.e. the same layout Delta/Iceberg
-  manage; the delta-log is replaced by atomic directory swap locally
-  and would be a real table format on a cluster.
+- A table is a parquet directory, the *base rowset* (optionally
+  partitioned by a column, written with ``partitionBy``), i.e. the same
+  layout Delta/Iceberg manage; the delta-log is replaced by atomic
+  directory swap locally and would be a real table format on a cluster.
+  The table keeps its schema as metadata (``storage.StoredSchema``), so
+  no scan runs Spark's footer-inference job.
 - Ingest-time rollup for AGG = ``groupBy(keys).agg(...)`` on the
   incoming batch — a map-side combine that shrinks data *before* it
   hits storage, the property that matters at 100 TB ingest.
-- Upsert = anti-join/window merge, rewriting only the partitions the
-  batch touches (dynamic partition overwrite) — the reference's
-  per-tablet write amplification, not a full-table rewrite.
+- UNIQUE/PRIMARY upsert = merge-on-write into ONE key-deduplicated
+  *delta rowset* under ``<path>/_delta/`` (written with the table's
+  ``partitionBy``; Spark's scans skip ``_``-prefixed names, so the base
+  scan never sees it). The batch replaces the delta's rows for its keys;
+  with ``version_cols`` a key's delta row is the newest-by-version of
+  its live row and the batch's rows. The delta's key set is the base's
+  delete vector: reads return ``base ⋉̸ delta keys ∪ delta``, so an
+  upsert writes the delta, never the base — the write costs the batch
+  plus the delta, not the table.
+- Fold = rewrite the live rows as a new base with no delta. DELETE,
+  UPDATE, MERGE and every ``_rewrite`` caller fold; an upsert folds when
+  the delta's part-file bytes reach half the base's, which bounds both
+  the read-time anti-join and the delta rewritten per upsert.
 - Compaction = re-aggregate / re-deduplicate and rewrite — the
   reference's base compaction (be/src/storage/compaction*.cpp).
 
@@ -36,6 +48,7 @@ merge is covered by the sketch UDAFs in operators/aggregates.py.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import uuid
@@ -51,6 +64,12 @@ from starrocks_spark.tables.partitioning import (
     PartitionScheme,
     with_partition_col,
 )
+from starrocks_spark.tables.storage import StoredSchema, part_file_bytes
+
+log = logging.getLogger(__name__)
+
+# the UNIQUE/PRIMARY delta rowset, inside the table directory
+DELTA_DIR = "_delta"
 
 
 class TableModel(str, Enum):
@@ -103,6 +122,13 @@ class ManagedTable:
     rollups: list = field(default_factory=list)
     #: name of the index the last read_agg() scanned (tests assert it)
     last_index_used: str | None = None
+    # schemas of the base and the delta rowset (set in __post_init__)
+    _schema: StoredSchema = field(default=None, init=False, repr=False)
+    _delta_schema: StoredSchema = field(default=None, init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        self._schema = StoredSchema(self.partition_by)
+        self._delta_schema = StoredSchema(self.partition_by)
 
     # ------------------------------------------------------------------ util
 
@@ -138,30 +164,65 @@ class ManagedTable:
     def _exists(self) -> bool:
         return os.path.isdir(self.path) and any(os.scandir(self.path))
 
+    def _delta_path(self) -> str:
+        return os.path.join(self.path, DELTA_DIR)
+
     def _current(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The live rows: the base rowset, minus the rows whose key the
+        delta rowset holds (its delete vector), plus the delta's rows.
+        Without a delta this is the plain base scan."""
+        base = self._schema.scan(self.spark, self.path)
+        if not os.path.isdir(self._delta_path()):
+            return base
+        delta = self._delta_schema.scan(self.spark, self._delta_path())
+        return self._key_join(base, delta.select(*self.key_cols),
+                              "left_anti").unionByName(delta)
+
+    def _key_join(self, df: DataFrame, keys: DataFrame,
+                  how: str) -> DataFrame:
+        """Semi/anti join of ``df`` on the key columns of ``keys``. Plain
+        SQL equality: a NULL key matches no key (NOT NULL key columns
+        never hold one), and a single integral key builds Spark's compact
+        long-keyed hash relation where a null-safe key would allocate a
+        full memory page per broadcast."""
+        cond = [df[k] == keys[k] for k in self.key_cols]
+        return df.join(keys, cond, how)
+
+    def _columns(self) -> list[str]:
+        """The stored column names in scan order."""
+        if self._schema.schema is None:
+            self._schema.scan(self.spark, self.path)
+        names = self._schema.schema.fieldNames()
+        return names + [self.partition_by] if self.partition_by else names
 
     def _write(self, df: DataFrame, mode: str) -> None:
         w = df.write.mode(mode)
         if self.partition_by:
             w = w.partitionBy(self.partition_by)
         w.parquet(self.path)
+        self._schema.wrote(df)
 
-    def _rewrite(self, df: DataFrame) -> None:
-        """Full atomic rewrite via staging dir + swap (local stand-in
-        for a table-format transaction commit)."""
-        out = self.path + ".staging"
+    def _write_swap(self, df: DataFrame, target: str) -> None:
+        """Write ``df`` to a staging directory, then swap it in for
+        ``target`` (local stand-in for a table-format commit)."""
+        out = target + ".staging"
         shutil.rmtree(out, ignore_errors=True)
         w = df.write.mode("overwrite")
         if self.partition_by:
             w = w.partitionBy(self.partition_by)
         w.parquet(out)
-        old = self.path + ".old"
+        old = target + ".old"
         shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(out, self.path)
+        if os.path.isdir(target):
+            os.rename(target, old)
+        os.rename(out, target)
         shutil.rmtree(old, ignore_errors=True)
+
+    def _rewrite(self, df: DataFrame) -> None:
+        """Full atomic rewrite: ``df`` becomes the base and the delta
+        rowset is gone (the fold)."""
+        self._write_swap(df, self.path)
+        self._schema.wrote(df)
 
     # ----------------------------------------------------------------- rollup
 
@@ -307,35 +368,52 @@ class ManagedTable:
         if not self._exists():
             self._write(self._latest_per_key(batch), "append")
             return
-        if self.partition_by:
-            # rewrite only the partitions present in the batch (dynamic
-            # overwrite): bounded write amplification at scale.
-            parts = [r[0] for r in
-                     batch.select(self.partition_by).distinct().collect()]
-            current = self._current().filter(F.col(self.partition_by).isin(parts))
-            merged = self._upsert(current, batch)
-            merged.write.mode("overwrite") \
-                .option("partitionOverwriteMode", "dynamic") \
-                .partitionBy(self.partition_by) \
-                .parquet(self.path)  # per-writer option: correct even when
-            # the session default is static overwrite
-        else:
-            merged = self._upsert(self._current(), batch)
-            self._rewrite(merged)
+        self._upsert(batch)
 
-    def _upsert(self, current: DataFrame, batch: DataFrame) -> DataFrame:
-        """UNIQUE/PRIMARY merge of a load batch into the stored rows.
-        With ``version_cols`` the version decides regardless of load
-        order (StarRocks sequence column). WITHOUT a sequence column
-        StarRocks' rule is LOAD ORDER: the incoming batch replaces
-        stored rows on key match (fe docs: unique key table, later
-        load overrides) — a version-less union+window would pick an
-        arbitrary row instead."""
+    def _upsert(self, batch: DataFrame) -> None:
+        """UNIQUE/PRIMARY merge of a load batch into the delta rowset,
+        partitioned or not: the base is neither read (version-less) nor
+        written. With ``version_cols`` the version decides regardless
+        of load order (StarRocks sequence column), so a key's new delta
+        row is the newest of its live row and the batch's rows. WITHOUT
+        a sequence column StarRocks' rule is LOAD ORDER: the batch's row
+        replaces the stored one on key match (fe docs: unique key table,
+        later load overrides)."""
+        batch = self._align(batch)
+        keys = batch.select(*self.key_cols)
         if self.version_cols:
-            return self._latest_per_key(current.unionByName(batch))
-        keys = batch.select(*self.key_cols).distinct()
-        survivors = current.join(keys, self.key_cols, "left_anti")
-        return survivors.unionByName(self._latest_per_key(batch))
+            live = self._key_join(self._current(), keys, "left_semi")
+            rows = self._latest_per_key(live.unionByName(batch))
+        else:
+            rows = self._latest_per_key(batch)
+        if os.path.isdir(self._delta_path()):
+            delta = self._delta_schema.scan(self.spark, self._delta_path())
+            rows = self._key_join(delta, keys, "left_anti").unionByName(rows)
+        self._write_swap(rows, self._delta_path())
+        same = self._schema.stores(rows)
+        self._delta_schema = StoredSchema(
+            self.partition_by, self._schema.schema if same else None)
+        delta_b = part_file_bytes(self._delta_path())
+        base_b = part_file_bytes(self.path)
+        # fold rule: the delta's bytes reach half the base's (a delta
+        # whose column types differ from the base's folds at once)
+        fold = not same or 2 * delta_b >= base_b
+        log.info("%s: delta %d B, base %d B, same columns %s -> fold %s",
+                 self.path, delta_b, base_b, same, fold)
+        if fold:
+            self._rewrite(self._current())
+
+    def _align(self, batch: DataFrame) -> DataFrame:
+        """The batch's columns under the table's names, in its stored
+        order (names match case-insensitively, like unionByName)."""
+        cols = self._columns()
+        by_lower = {c.lower(): c for c in batch.columns}
+        if sorted(by_lower) != sorted(c.lower() for c in cols):
+            raise ValueError(f"batch columns {batch.columns} do not match "
+                             f"the table's {cols}")
+        return batch.select(*[
+            batch["`" + by_lower[c.lower()].replace("`", "``") + "`"].alias(c)
+            for c in cols])
 
     def _rebuild_rollups(self) -> None:
         """DML (delete/update/merge) rewrites base rows, which an
@@ -404,7 +482,8 @@ class ManagedTable:
         elif update_set is not None:
             raise ValueError("pass either update_set or when_matched, not both")
 
-        target = self._current().alias("t")
+        current = self._current()
+        target = current.alias("t")
         src = source.alias("s")
         cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in self.key_cols]
         joined = target.join(src, cond, "full_outer")
@@ -436,7 +515,7 @@ class ManagedTable:
         )
 
         out_cols = []
-        for c in self._current().columns:
+        for c in current.columns:
             source_val = F.col(f"s.{c}") if c in source.columns else F.lit(None)
             col_expr = F.when(F.col("__action") == KEEP, F.col(f"t.{c}")) \
                 .when(F.col("__action") == INSERT, source_val)
@@ -497,6 +576,7 @@ class ManagedTable:
             "key_cols": list(key_cols),
             "agg_spec": dict(agg_spec),
             "path": self.path + f".rollup_{name}",
+            "schema": StoredSchema(),
         })
         shutil.rmtree(self.path + f".rollup_{name}", ignore_errors=True)
 
@@ -504,8 +584,9 @@ class ManagedTable:
         aggs = [
             _AGG_FNS[how](c).alias(c) for c, how in r["agg_spec"].items()
         ] + [F.count(F.lit(1)).alias("__n")]
-        batch.groupBy(*r["key_cols"]).agg(*aggs) \
-            .write.mode("append").parquet(r["path"])
+        out = batch.groupBy(*r["key_cols"]).agg(*aggs)
+        out.write.mode("append").parquet(r["path"])
+        r["schema"].wrote(out)
 
     def read_agg(self, group_cols: list[str],
                  aggs: dict[str, tuple[str, str]]) -> DataFrame:
@@ -544,7 +625,7 @@ class ManagedTable:
             # __n slice), so one groupBy at the QUERY grain aggregates
             # the raw rowset rows directly — no intermediate full-key
             # merge shuffle
-            src = self.spark.read.parquet(r["path"])
+            src = r["schema"].scan(self.spark, r["path"])
             out = [
                 (F.sum("__n") if fn == "count" else _AGG_FNS[fn](col))
                 .alias(name)
@@ -568,7 +649,7 @@ class ManagedTable:
     def read(self) -> DataFrame:
         """Model-aware scan. AGG_KEYS merges un-compacted rowsets by
         re-applying the rollup (the reference's query-time
-        pre-aggregation); UNIQUE/PRIMARY are already merge-on-write."""
+        pre-aggregation); UNIQUE/PRIMARY apply the delta rowset."""
         df = self._current()
         if self.model == TableModel.AGG_KEYS:
             return self._rollup(df)

@@ -5,10 +5,14 @@ data file. Also checks version semantics and replay safety of the
 merge path itself (batch-level, no stream needed — foreachBatch
 calls exactly this function)."""
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
-from starrocks_spark.streaming.ingest import _merge_batch
+from starrocks_spark.streaming.ingest import _merge_batch, state_partitions_for
 from starrocks_spark.tables.lakehouse import SnapshotTable
+from starrocks_spark.tables.storage import part_file_bytes
 
 
 def _mk_table(spark, tmp_path, n=1000, files=4):
@@ -71,3 +75,30 @@ def test_stale_batch_row_is_ignored_and_replay_safe(spark, tmp_path):
     assert t.read(version=v1).filter(
         F.col("user_id") == 7
     ).collect()[0]["event_type"] == "init"
+
+
+def test_state_partitions_sized_from_directory_part_files(
+        spark, tmp_path, monkeypatch, caplog):
+    """A Spark-written (directory) source is sized by its part files,
+    not the directory entry, and a small per-store target derives more
+    than one state store."""
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("needs a session with parallelism >= 2")
+    src = str(tmp_path / "events.parquet")
+    spark.range(20000).selectExpr("id", "id * 7 AS v") \
+        .repartition(3).write.parquet(src)
+    raw = part_file_bytes(src)
+    assert raw > 20000
+    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE_BYTES", str(raw))
+    with caplog.at_level(logging.INFO, logger="starrocks_spark.streaming.ingest"):
+        n = state_partitions_for(spark, str(tmp_path))
+    assert n == min(4, par) > 1
+    assert f"{raw} B" in caplog.records[-1].getMessage()
+
+
+def test_state_partitions_unresolvable_path_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        state_partitions_for(spark, str(tmp_path / "missing"))
+    with pytest.raises(FileNotFoundError):
+        state_partitions_for(spark, "s3a://bucket/sf")

@@ -1,11 +1,19 @@
 """Unit tests for the table-model layer (tables/models.py): model
-semantics, UPDATE, partitioned upsert with dynamic overwrite, and
-compaction idempotence."""
+semantics, UPDATE, UNIQUE/PRIMARY upserts into the delta rowset
+(checked against a pandas model), folds and compaction, and scans that
+carry the stored schema instead of running an inference job."""
 
 from __future__ import annotations
 
+import logging
+import os
+import random
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from starrocks_spark.tables.materialized_view import MaterializedView
 from starrocks_spark.tables.models import ManagedTable, TableModel
 
 
@@ -330,3 +338,218 @@ def test_rollup_rejected_on_upsert_models_and_rebuilt_on_delete(spark):
     assert t.last_index_used == "by_g"
     assert got == {"a": 10, "b": 30}  # deleted row not served
     t.drop()
+
+
+# ------------------------------------------------ delta-rowset upserts
+
+_SCHEMA = "k long, v long, ver long, p string"
+_COLS = ["k", "v", "ver", "p"]
+
+
+def _base_rows(n=3000, seed=0):
+    rng = random.Random(seed)
+    return [(k, rng.randrange(10**6), 1, f"p{k % 3}") for k in range(n)]
+
+
+def _live(t):
+    return sorted(tuple(r) for r in t.read().select(*_COLS).collect())
+
+
+def _expected(model):
+    return sorted(tuple(r) for r in model[_COLS].itertuples(index=False))
+
+
+def _model_upsert(model, rows, versioned):
+    """pandas model of UNIQUE/PRIMARY semantics: the newest version per
+    key wins, or without versions the batch row replaces the stored."""
+    both = pd.concat([model, pd.DataFrame(rows, columns=_COLS)])
+    if versioned:
+        both = both.sort_values("ver", kind="stable")
+    return both.drop_duplicates("k", keep="last").reset_index(drop=True)
+
+
+def _batches(variant, rng):
+    """Four seeded batches of 20 rows, a tenth of them new keys.
+    ``versioned``: versions rise per batch, a key repeats inside one
+    batch, and the third batch is a late one carrying older versions.
+    ``partitioned``: existing keys move to another partition."""
+    out = []
+    for b in range(4):
+        keys = rng.sample(range(3000), 18) + [3000 + 2 * b, 3001 + 2 * b]
+        ver = 0 if (variant == "versioned" and b == 2) else b + 2
+        rows = []
+        for k in keys:
+            p = f"p{(k + b + 1) % 3}" if variant == "partitioned" else f"p{k % 3}"
+            rows.append((k, rng.randrange(10**6), ver, p))
+        if variant == "versioned" and b != 2:
+            k, _, _, p = rows[0]
+            rows.append((k, rng.randrange(10**6), ver - 1, p))
+        out.append(rows)
+    return out
+
+
+@pytest.mark.parametrize("model", [TableModel.PRIMARY_KEYS,
+                                   TableModel.UNIQUE_KEYS])
+@pytest.mark.parametrize("variant", ["versionless", "versioned",
+                                     "partitioned"])
+def test_upsert_sequence_matches_pandas_model(spark, model, variant):
+    versioned = variant == "versioned"
+    t = ManagedTable.create(
+        spark, model, ["k"], version_cols=["ver"] if versioned else None,
+        partition_by="p" if variant == "partitioned" else None)
+    base = _base_rows()
+    t.insert(spark.createDataFrame(base, _SCHEMA))
+    expected = pd.DataFrame(base, columns=_COLS)
+    for rows in _batches(variant, random.Random(f"{model}-{variant}")):
+        t.insert(spark.createDataFrame(rows, _SCHEMA))
+        expected = _model_upsert(expected, rows, versioned)
+        assert os.path.isdir(t._delta_path())  # no fold at this size
+        assert _live(t) == _expected(expected)
+    t.drop()
+
+
+def _table_with_delta(spark, model=TableModel.PRIMARY_KEYS):
+    t = ManagedTable.create(spark, model, ["k"])
+    base = _base_rows()
+    t.insert(spark.createDataFrame(base, _SCHEMA))
+    expected = pd.DataFrame(base, columns=_COLS)
+    return t, expected
+
+
+def _upsert(spark, t, expected, seed):
+    rows = _batches("versionless", random.Random(seed))[0]
+    t.insert(spark.createDataFrame(rows, _SCHEMA))
+    assert os.path.isdir(t._delta_path())
+    return _model_upsert(expected, rows, False)
+
+
+def test_dml_after_delta_folds_with_same_semantics(spark):
+    t, expected = _table_with_delta(spark)
+
+    expected = _upsert(spark, t, expected, 1)
+    t.update({"v": "v + 1000"}, "k < 10")
+    expected.loc[expected.k < 10, "v"] += 1000
+    assert not os.path.isdir(t._delta_path())
+    assert _live(t) == _expected(expected)
+
+    expected = _upsert(spark, t, expected, 2)
+    t.delete("k % 7 = 0")
+    expected = expected[expected.k % 7 != 0]
+    assert _live(t) == _expected(expected)
+
+    expected = _upsert(spark, t, expected, 3)
+    src = spark.createDataFrame([(1, 5, 9, "p1"), (5000, 1, 9, "p2")],
+                                _SCHEMA)
+    t.merge_into(src, update_set={"v": "t.v + s.v"})
+    expected.loc[expected.k == 1, "v"] += 5
+    expected = pd.concat([expected, pd.DataFrame(
+        [(5000, 1, 9, "p2")], columns=_COLS)])
+    assert _live(t) == _expected(expected)
+
+    # an ALTER-style rewrite changes the column set: the kept schema is
+    # dropped, the new column is visible, and upserts carry it on
+    expected = _upsert(spark, t, expected, 4)
+    t._rewrite(t._current().withColumn("extra", F.lit(7)))
+    assert t._schema.schema is None
+    assert t.read().columns == _COLS + ["extra"]
+    assert t._schema.schema.fieldNames() == _COLS + ["extra"]
+    t.insert(spark.createDataFrame([(2, 42, 9, "p2", 8)],
+                                   _SCHEMA + ", extra int"))
+    expected.loc[expected.k == 2, ["v", "ver", "p"]] = [42, 9, "p2"]
+    assert _live(t) == _expected(expected)
+    extra = dict(t.read().select("k", "extra").collect())
+    assert extra[2] == 8 and extra[3] == 7
+    t.drop()
+
+
+def test_explicit_compact_and_automatic_fold(spark, caplog):
+    t, expected = _table_with_delta(spark, TableModel.UNIQUE_KEYS)
+    expected = _upsert(spark, t, expected, 5)
+    t.compact()
+    assert not os.path.isdir(t._delta_path())
+    assert _live(t) == _expected(expected)
+
+    # a batch whose delta reaches half the base's bytes folds at once
+    rng = random.Random(6)
+    big = [(k, rng.randrange(10**6), 2, f"p{k % 3}") for k in range(2000)]
+    with caplog.at_level(logging.INFO, logger="starrocks_spark.tables.models"):
+        t.insert(spark.createDataFrame(big, _SCHEMA))
+    expected = _model_upsert(expected, big, False)
+    assert not os.path.isdir(t._delta_path())
+    assert _live(t) == _expected(expected)
+    msg = [r.getMessage() for r in caplog.records if "fold" in r.getMessage()]
+    assert msg and msg[-1].endswith("fold True") and " B, base " in msg[-1]
+    t.drop()
+
+
+def _base_files(t):
+    out = {}
+    for d, dirs, names in os.walk(t.path):
+        dirs[:] = [n for n in dirs if not n.startswith("_")]
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), t.path)] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("partition_by", [None, "p"])
+def test_upsert_leaves_base_part_files_byte_identical(spark, partition_by):
+    t = ManagedTable.create(spark, TableModel.PRIMARY_KEYS, ["k"],
+                            partition_by=partition_by)
+    t.insert(spark.createDataFrame(_base_rows(), _SCHEMA))
+    before = _base_files(t)
+    assert any(k.endswith(".parquet") for k in before)
+    for seed in (7, 8):
+        rows = _batches("partitioned", random.Random(seed))[0]
+        t.insert(spark.createDataFrame(rows, _SCHEMA))
+        assert _base_files(t) == before
+    t.drop()
+
+
+def _jobs_while(spark, fn):
+    """Spark jobs launched while ``fn`` runs (its job group's)."""
+    sc = spark.sparkContext
+    group = f"jobs_while_{random.getrandbits(32)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_after_upsert_runs_no_inference_job(spark):
+    t, expected = _table_with_delta(spark)
+    t.read().count()
+    _upsert(spark, t, expected, 9)
+    # building the scan launches no job; an inferring scan launches one
+    assert _jobs_while(spark, t.read) == 0
+    assert _jobs_while(spark, lambda: spark.read.parquet(t.path)) == 1
+    t.drop()
+
+
+def test_rollup_and_mv_reads_carry_the_stored_schema(spark, tmp_path):
+    t = ManagedTable.create(spark, TableModel.DUP_KEYS, ["k", "p"])
+    t.add_rollup("by_p", ["p"], {"v": "sum"})
+    rows = spark.createDataFrame(_base_rows(300), _SCHEMA)
+    t.insert(rows)
+    aggs = {"s": ("sum", "v"), "n": ("count", "*")}
+    first = sorted(t.read_agg(["p"], aggs).collect())
+    t.insert(rows)
+    assert _jobs_while(spark, lambda: t.read_agg(["p"], aggs)) == 0
+    assert t.last_index_used == "by_p"
+    assert sorted(t.read_agg(["p"], aggs).collect()) == [
+        (p, 2 * s, 2 * n) for p, s, n in first]
+    t.drop()
+
+    mv = MaterializedView(spark, lambda src: src.groupBy("p").agg(
+        F.sum("v").alias("s")), "p", "p", path=str(tmp_path / "mv"))
+    mv.refresh(rows)
+    mv.read().count()
+    changed = rows.withColumn(
+        "v", F.when(F.col("p") == "p0", F.col("v") + 1).otherwise(F.col("v")))
+    assert mv.refresh(changed) == 1
+    assert _jobs_while(spark, mv.read) == 0
+    want = changed.groupBy("p").agg(F.sum("v").alias("s"))
+    assert sorted(mv.read().select("p", "s").collect()) == sorted(want.collect())
+    mv.drop()
