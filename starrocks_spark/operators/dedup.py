@@ -54,6 +54,28 @@ def _iter_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def _checkpoint_file(df: DataFrame) -> str | None:
+    """The reliable-checkpoint directory behind a checkpointed frame,
+    or None (local checkpoint, or not yet materialized)."""
+    f = df._jdf.queryExecution().logical().rdd().getCheckpointFile()
+    return f.get() if f.isDefined() else None
+
+
+def _delete_checkpoint_files(frames: list[DataFrame], keep: DataFrame) -> None:
+    """Delete the reliable-checkpoint directories of ``frames`` once
+    ``keep``'s own checkpoint is written: from then on ``keep``'s
+    lineage starts at its checkpoint and no longer reads theirs."""
+    if _checkpoint_file(keep) is None:
+        return
+    jvm = keep.sparkSession._jvm
+    hconf = keep.sparkSession._jsc.hadoopConfiguration()
+    for df in frames:
+        f = _checkpoint_file(df)
+        if f is not None:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            path.getFileSystem(hconf).delete(path, True)
+
+
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Exact dedup on normalized text: md5 fingerprint → groupBy.
@@ -408,7 +430,7 @@ def connected_components(
         .agg(F.min("d").alias("_nm"))
         .select("id", F.least(F.col("id"), F.col("_nm")).alias("label"))
     )
-    superseded = []
+    checkpoints = [edges, labels]
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(labels, edges.s == labels.id)
@@ -430,7 +452,7 @@ def connected_components(
             )
         )
         changed = stepped.filter(F.col("label") != F.col("_old")).count()
-        superseded.append(labels)
+        checkpoints.append(stepped)
         labels = stepped.drop("_old")
         if changed == 0:
             break
@@ -438,7 +460,11 @@ def connected_components(
     # ContextCleaner reclaims a checkpointed RDD only when its JVM
     # handle is unreachable, but a per-iteration full gc.collect()
     # (the old form) cost ~0.1 s/iter of pure Python GC; ≤ max_iters
-    # label-table snapshots are metadata-scale, so one sweep suffices
-    del superseded
+    # label-table snapshots are metadata-scale, so one sweep suffices.
+    # The cleaner never deletes reliable-checkpoint files (unless
+    # spark.cleaner.referenceTracking.cleanCheckpoints is set), so
+    # their directories are deleted here, all but the returned frame's.
+    _delete_checkpoint_files(checkpoints[:-1], keep=checkpoints[-1])
+    del checkpoints
     gc.collect()
     return labels.select("id", F.col("label").alias("cluster_id"))

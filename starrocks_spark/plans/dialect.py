@@ -32,6 +32,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from starrocks_spark.catalog import register_tables
+from starrocks_spark.session import plan_small_statically
 
 # ---------------------------------------------------------------------------
 # MySQL date-format token → Java DateTimeFormatter pattern
@@ -2966,7 +2967,12 @@ def translate(sql: str) -> str:
 
 
 def starrocks_sql(spark: SparkSession, sql: str, sf_dir: str) -> DataFrame:
-    """Run a StarRocks-dialect query against the registered tables."""
+    """Run a StarRocks-dialect query against the registered tables.
+
+    The returned frame is already physically planned: with adaptive
+    execution off when the query's leaf input is below one advisory
+    partition, else adaptively (``session.plan_small_statically``).
+    """
     from starrocks_spark.functions import (aesfn, bitmap, datediff,
                                            hllfn, jodafmt, jsonshape,
                                            mmh3, mysqlweek, percentile,
@@ -2991,4 +2997,4 @@ def starrocks_sql(spark: SparkSession, sql: str, sf_dir: str) -> DataFrame:
     jodafmt.register(spark)
     aesfn.register(spark)
     hllfn.register(spark)
-    return spark.sql(translate(sql))
+    return plan_small_statically(spark.sql(translate(sql)))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from starrocks_spark.catalog import load_table
+from starrocks_spark.catalog import load_table, register_tables
 from starrocks_spark.queries._util import (dsum, fixed, lit_frame, maybe_broadcast,
                                             sql_dsum, sql_fixed)
 
@@ -249,7 +249,7 @@ GROUP BY CUBE (c_mktsegment, n_name)
 
 def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS list via SQL."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt
@@ -398,8 +398,7 @@ def subquery_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN with a nullable inner side → Catalyst plans a
     null-aware anti join (reference: NULL_AWARE_LEFT_ANTI,
     PlanNodes.thrift:836)."""
-    for t in ("supplier", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT s_suppkey, s_name
@@ -420,7 +419,7 @@ WHERE s_nationkey NOT IN (
 
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: orders above the global average."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_tables(spark, sf_dir)
     avg_expr = (
         "CAST(SUM(CAST(FLOOR((o_totalprice) * 10000.0 + 0.5) AS DECIMAL(38,0)))"
         " AS DOUBLE) / 10000.0 / COUNT(o_totalprice)"

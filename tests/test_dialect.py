@@ -1,5 +1,7 @@
 """Unit tests for the StarRocks→Spark SQL dialect translator
-(plans/dialect.py) — string-level, no Spark session needed."""
+(plans/dialect.py), mostly string-level, and for the per-query floor of
+its ``starrocks_sql`` entry point: register-once views, static planning
+of small queries, and codegen classes kept per query shape."""
 
 from __future__ import annotations
 
@@ -251,3 +253,146 @@ def test_concat_dbl_skips_decimal_and_backtick_args():
     # a '/' inside a backtick-quoted identifier is not division
     s4 = dialect.translate("select concat('x', `a/b`) from t")
     assert "__sr_dstr" not in s4
+
+
+# --- the short-query floor: register-once views, static planning of
+#     small queries, codegen classes kept per query shape ---------------
+
+_JOIN_SQL = """
+SELECT o_orderpriority, COUNT(*) AS n, SUM(l_quantity) AS qty
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+WHERE o_orderdate < DATE '1995-01-01'
+GROUP BY o_orderpriority ORDER BY o_orderpriority
+"""
+_AQE = "spark.sql.adaptive.enabled"
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _big_sf(sf_dir):
+    import os
+
+    import pytest
+
+    big = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    if not os.path.isdir(big):
+        pytest.skip(f"{big} absent")
+    return big
+
+
+def _view_spy(spark, monkeypatch):
+    """Names passed to createOrReplaceTempView from now on."""
+    made = []
+    cls = type(spark.range(1))
+    real = cls.createOrReplaceTempView
+
+    def spy(self, name):
+        made.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", spy)
+    return made
+
+
+def _plan_node(df) -> str:
+    return df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+
+
+def _count(spark, table):
+    return spark.sql(f"SELECT COUNT(*) FROM {table}").first()[0]
+
+
+def test_register_tables_registers_each_view_once(spark, sf_dir, monkeypatch):
+    from starrocks_spark.catalog import TABLES, register_tables
+
+    big = _big_sf(sf_dir)
+    register_tables(spark, big)
+    want = {t: _count(spark, t) for t in ("orders", "nation")}
+    made = _view_spy(spark, monkeypatch)
+    register_tables(spark, big)
+    assert made == []
+    assert {t: _count(spark, t) for t in want} == want
+    # replaced by someone else's view, or dropped: only that view again
+    spark.range(3).createOrReplaceTempView("orders")
+    made.clear()
+    register_tables(spark, big)
+    assert made == ["orders"]
+    spark.catalog.dropTempView("nation")
+    made.clear()
+    register_tables(spark, big)
+    assert made == ["nation"]
+    assert {t: _count(spark, t) for t in want} == want
+    # another sf_dir replaces every view, and switching back does too
+    made.clear()
+    register_tables(spark, sf_dir)
+    assert made == TABLES
+    assert _count(spark, "orders") < want["orders"]
+    made.clear()
+    register_tables(spark, big)
+    assert made == TABLES
+    assert {t: _count(spark, t) for t in want} == want
+
+
+def test_starrocks_sql_plans_small_input_statically(spark, sf_dir):
+    from starrocks_spark.plans.dialect import starrocks_sql
+
+    big = _big_sf(sf_dir)
+    df = starrocks_sql(spark, _JOIN_SQL, big)
+    assert _plan_node(df) != "AdaptiveSparkPlanExec"
+    adaptive = spark.sql(translate(_JOIN_SQL))
+    assert _plan_node(adaptive) == "AdaptiveSparkPlanExec"
+    assert df.collect() == adaptive.collect()
+
+
+def test_starrocks_sql_stays_adaptive_above_advisory_size(spark, sf_dir):
+    """With the advisory partition below lineitem's bytes (but above
+    nation's), a query over lineitem plans adaptively — also when
+    lineitem sits only inside a scalar subquery."""
+    from starrocks_spark.plans.dialect import starrocks_sql
+
+    prev = spark.conf.get(_ADVISORY)
+    spark.conf.set(_ADVISORY, "64k")
+    try:
+        assert _plan_node(starrocks_sql(spark, _JOIN_SQL, sf_dir)) \
+            == "AdaptiveSparkPlanExec"
+        sub = starrocks_sql(
+            spark,
+            "SELECT n_name FROM nation WHERE n_nationkey < "
+            "(SELECT COUNT(*) FROM lineitem) / 10000", sf_dir)
+        assert _plan_node(sub) == "AdaptiveSparkPlanExec"
+        small = starrocks_sql(
+            spark, "SELECT n_name FROM nation WHERE n_nationkey < 5", sf_dir)
+        assert _plan_node(small) != "AdaptiveSparkPlanExec"
+        assert len(small.collect()) == 5
+    finally:
+        spark.conf.set(_ADVISORY, prev)
+
+
+def test_starrocks_sql_restores_adaptive_conf(spark, sf_dir):
+    from starrocks_spark.plans.dialect import starrocks_sql
+
+    prev = spark.conf.get(_AQE)
+    try:
+        for value in ("true", "false"):
+            spark.conf.set(_AQE, value)
+            starrocks_sql(spark, _JOIN_SQL, sf_dir).collect()
+            assert spark.conf.get(_AQE) == value
+    finally:
+        spark.conf.set(_AQE, prev)
+
+
+def test_query_shape_classes_survive_100_other_classes(spark, sf_dir):
+    """The codegen cache holds a query's classes after 100+ others
+    were generated (Spark's stock cache keeps 100): the re-run
+    compiles nothing."""
+    from starrocks_spark.plans.dialect import starrocks_sql
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    want = starrocks_sql(spark, _JOIN_SQL, sf_dir).collect()
+    before = compiles.getCount()
+    for i in range(120):  # each literal is a new generated class
+        spark.range(1).selectExpr(f"id * {i + 7} AS x").collect()
+    assert compiles.getCount() - before >= 100
+    before = compiles.getCount()
+    assert starrocks_sql(spark, _JOIN_SQL, sf_dir).collect() == want
+    assert compiles.getCount() == before
