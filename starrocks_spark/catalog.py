@@ -5,21 +5,24 @@ table names to tablet scans. Here a table is a parquet directory and a
 scan is Spark's vectorized parquet reader, which already provides the
 reference's zone-map / dictionary / bloom pruning via row-group stats.
 
-Views are registered once per (session, sf_dir, table), like the
-reference FE resolving names against a catalog it already holds:
-``register_tables`` keeps the JVM view relation each registration
-created and, on later calls, re-registers only a view that is missing
-or was replaced (another sf_dir, a drop, a new session, or anyone
-else's ``createOrReplaceTempView``).
+Tables and views live in the session's engine state
+(``session.session_memo``), like the reference FE resolving names
+against a catalog it already holds: ``load_table`` builds each
+(sf_dir, table) scan once per session, and ``register_tables`` keeps
+the JVM view relation each registration created and, on later calls,
+re-registers only a view that is missing or was replaced (another
+sf_dir, a drop, or anyone else's ``createOrReplaceTempView``). A new
+session starts with empty state and registers its own.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from starrocks_spark.session import session_memo
 
 TABLES = [
     "region",
@@ -36,23 +39,20 @@ TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# DataFrame-HANDLE cache: (session, dir, table) → the analyzed scan.
-# This caches METADATA only — the unresolved plan + schema, like the
-# reference FE's table catalog — never rows: every action still scans
-# the parquet input. Without it each query re-pays file listing +
-# footer schema inference + py4j per table (~30-60 ms × 2-5 tables ×
-# 180+ bench queries). Keyed on the live session OBJECT (`is` check)
-# so a restarted session can never serve a stale handle.
-_DF_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    hit = _DF_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = _load_table(spark, sf_dir, name)
-    _DF_CACHE[key] = (spark, df)
+    """The scan of one table, built once per (session, sf_dir, table).
+
+    The session state caches METADATA only — the unresolved plan +
+    schema, like the reference FE's table catalog — never rows: every
+    action still scans the parquet input. Without it each query
+    re-pays file listing + footer schema inference + py4j per table
+    (~30-60 ms × 2-5 tables × 180+ bench queries).
+    """
+    frames = session_memo(spark).setdefault("tables", {})
+    df = frames.get((sf_dir, name))
+    if df is None:
+        df = frames[(sf_dir, name)] = _load_table(spark, sf_dir, name)
     return df
 
 
@@ -86,15 +86,6 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Register-once memo, same key as _DF_CACHE → the JVM view relation
-# (Option[TemporaryViewRelation]) our registration left in the session
-# catalog. Re-registering all ten views cost 43-67 ms per starrocks_sql
-# call; checking them costs one getRawTempView lookup and one equals
-# per table (~3 ms for ten), because Scala's case-class equals tests
-# reference identity first.
-_VIEWS: dict[tuple[int, str, str], tuple[SparkSession, Any]] = {}
-
-
 def register_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR
 ) -> dict[str, DataFrame]:
@@ -102,16 +93,21 @@ def register_tables(
 
     A view this function registered earlier for the same session and
     ``sf_dir`` that is still in the session catalog is left alone.
+    Re-registering all ten views cost 43-67 ms per starrocks_sql call;
+    checking them costs one getRawTempView lookup and one equals per
+    table (~3 ms for ten), because Scala's case-class equals tests
+    reference identity first.
     """
     jcatalog = spark._jsparkSession.sessionState().catalog()
+    # (sf_dir, table) → the JVM view relation
+    # (Option[TemporaryViewRelation]) our registration left
+    views = session_memo(spark).setdefault("views", {})
     dfs = {}
     for name in TABLES:
         df = load_table(spark, sf_dir, name)
-        key = (id(spark), sf_dir, name)
-        hit = _VIEWS.get(key)
-        if (hit is None or hit[0] is not spark
-                or not jcatalog.getRawTempView(name).equals(hit[1])):
+        kept = views.get((sf_dir, name))
+        if kept is None or not jcatalog.getRawTempView(name).equals(kept):
             df.createOrReplaceTempView(name)
-            _VIEWS[key] = (spark, jcatalog.getRawTempView(name))
+            views[(sf_dir, name)] = jcatalog.getRawTempView(name)
         dfs[name] = df
     return dfs

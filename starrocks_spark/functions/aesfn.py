@@ -20,8 +20,6 @@ statement-gated acceptance surface.
 """
 from __future__ import annotations
 
-_REGISTERED: set[int] = set()
-
 DEFAULT_IV = b"STARROCKS_16BYTE"
 _GCM_TAG = 16
 
@@ -152,8 +150,6 @@ def aes_apply(data, key, iv, mode, aad, encrypt: bool):
 
 
 def register(spark) -> None:
-    if id(spark) in _REGISTERED:
-        return
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -173,4 +169,3 @@ def register(spark) -> None:
                        arrow_udf(_mk(True), "binary"))
     spark.udf.register("__sr_aes_decrypt",
                        arrow_udf(_mk(False), "binary"))
-    _REGISTERED.add(id(spark))

@@ -71,8 +71,6 @@ def subdivide_bitmap(a: Column, chunk: int) -> Column:
 # serialized transport (base64_to_bitmap / bitmap_to_base64)
 # ---------------------------------------------------------------------------
 
-_REGISTERED: set[int] = set()
-
 
 def _decode_bitmap(raw: bytes):
     """StarRocks BitmapValue serialization (be/src/util/bitmap_value.h
@@ -278,11 +276,9 @@ def _encode_bitmap(vals) -> bytes:
 
 
 def register(spark) -> None:
-    """SQL names for the serialized-bitmap transport pair (idempotent
-    per session); the value functions themselves compile to built-in
+    """SQL names for the serialized-bitmap transport pair, into
+    ``spark``; the value functions themselves compile to built-in
     array expressions in plans/dialect.py _BITMAP_WRAPS."""
-    if id(spark) in _REGISTERED:
-        return
     import base64
 
     import pandas as pd
@@ -353,4 +349,3 @@ def register(spark) -> None:
     spark.udf.register("__bitmap_to_base64", __bitmap_to_base64)
     spark.udf.register("__bitmap_to_binary", __bitmap_to_binary)
     spark.udf.register("__bitmap_from_binary", __bitmap_from_binary)
-    _REGISTERED.add(id(spark))

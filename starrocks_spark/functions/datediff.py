@@ -25,8 +25,6 @@ from __future__ import annotations
 import calendar
 import math
 
-_REGISTERED: set[int] = set()
-
 
 def _usq(dt) -> int:
     # BE us_of_day: ms-scale h/m/s plus us fraction (see module doc)
@@ -99,8 +97,6 @@ def period_diff(unit: str, a, b):
 
 def register(spark) -> None:
     """Register ``__sr_date_diff(unit, to, from) -> bigint``."""
-    if id(spark) in _REGISTERED:
-        return
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -112,4 +108,3 @@ def register(spark) -> None:
         return pa.array(out, pa.int64())
 
     spark.udf.register("__sr_date_diff", arrow_udf(_fn, "bigint"))
-    _REGISTERED.add(id(spark))

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import struct
 
-_REGISTERED: set[int] = set()
-
 MURMUR_PRIME = 0xC6A4A7935BD1E995
 MURMUR_SEED = 0xADC83B19
 _M64 = (1 << 64) - 1
@@ -234,8 +232,6 @@ _ARROW_INT_WIDTH = {"int8": 1, "int16": 2, "int32": 4, "int64": 8}
 
 
 def register(spark) -> None:
-    if id(spark) in _REGISTERED:
-        return
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.functions import (PandasUDFType, arrow_udf,
@@ -317,4 +313,3 @@ def register(spark) -> None:
         "__sr_ds_hll_agg",
         pandas_udf(_exact_distinct, "bigint",
                    PandasUDFType.GROUPED_AGG))
-    _REGISTERED.add(id(spark))

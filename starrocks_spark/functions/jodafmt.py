@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import datetime as _dt
 
-_REGISTERED: set[int] = set()
-
 _MONTHS = ["January", "February", "March", "April", "May", "June",
            "July", "August", "September", "October", "November",
            "December"]
@@ -118,8 +116,6 @@ def joda_format(ts, fmt: str, tzname: str):
 
 
 def register(spark) -> None:
-    if id(spark) in _REGISTERED:
-        return
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -133,4 +129,3 @@ def register(spark) -> None:
         return pa.array(out, pa.string())
 
     spark.udf.register("__sr_joda_format", arrow_udf(_fn, "string"))
-    _REGISTERED.add(id(spark))

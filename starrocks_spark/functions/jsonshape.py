@@ -20,8 +20,6 @@ types: ``from_json(__sr_json_shape(x, '<sr-type>'), '<spark-type>')``.
 import json
 import re
 
-_REGISTERED: set[int] = set()
-
 
 def parse_sr_type(t: str):
     """StarRocks type text → nested descriptor:
@@ -142,9 +140,7 @@ def norm_json(txt):
 
 def register(spark) -> None:
     """Register ``__sr_json_shape(txt, desc)`` and
-    ``__sr_json_norm(txt)`` (idempotent)."""
-    if id(spark) in _REGISTERED:
-        return
+    ``__sr_json_norm(txt)`` into ``spark``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -159,4 +155,3 @@ def register(spark) -> None:
 
     spark.udf.register("__sr_json_shape", __sr_json_shape)
     spark.udf.register("__sr_json_norm", __sr_json_norm)
-    _REGISTERED.add(id(spark))

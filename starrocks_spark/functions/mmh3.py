@@ -60,14 +60,9 @@ def _signed32(x: int) -> int:
     return x - (1 << 32) if x >= (1 << 31) else x
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark) -> None:
     """Register the two-arg chained step ``__mmh3_32(str, seed)`` as
-    an Arrow-batched pandas UDF (idempotent per session)."""
-    if id(spark) in _REGISTERED:
-        return
+    an Arrow-batched pandas UDF into ``spark``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -83,4 +78,3 @@ def register(spark) -> None:
         return pd.Series(out, dtype="Int64").astype("Int32")
 
     spark.udf.register("__mmh3_32", __mmh3_32)
-    _REGISTERED.add(id(spark))

@@ -11,8 +11,6 @@ test_datetime/test_yearweek (64 pinned values across modes 0-7).
 """
 from __future__ import annotations
 
-_REGISTERED: set[int] = set()
-
 
 def _daynr(y: int, m: int, d: int) -> int:
     """MySQL calc_daynr (mysys/my_time.cc) — days since year 0; the
@@ -84,8 +82,6 @@ def yearweek(dt, mode: int):
 
 
 def register(spark) -> None:
-    if id(spark) in _REGISTERED:
-        return
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -96,4 +92,3 @@ def register(spark) -> None:
             pa.int64())
 
     spark.udf.register("__sr_yearweek", arrow_udf(_fn, "bigint"))
-    _REGISTERED.add(id(spark))

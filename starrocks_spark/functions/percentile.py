@@ -27,8 +27,6 @@ import json
 import numpy as np
 import pandas as pd
 
-_REGISTERED: set[int] = set()
-
 
 def tdigest_quantile(vals: np.ndarray, q: float):
     """Interpolated quantile at rank ``q*n - 0.5`` (vals pre-sorted),
@@ -51,9 +49,7 @@ def tdigest_quantile(vals: np.ndarray, q: float):
 def register(spark) -> None:
     """Register ``__sr_percentile_approx(v, q)`` (double) and
     ``__sr_percentile_approx_arr(v, 'q1,q2,...')`` (JSON string the
-    caller wraps with from_json) — idempotent per session."""
-    if id(spark) in _REGISTERED:
-        return
+    caller wraps with from_json) into ``spark``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -77,4 +73,3 @@ def register(spark) -> None:
     spark.udf.register("__sr_percentile_approx", __sr_percentile_approx)
     spark.udf.register("__sr_percentile_approx_arr",
                        __sr_percentile_approx_arr)
-    _REGISTERED.add(id(spark))

@@ -22,8 +22,6 @@ with the preprocessing applied per value.
 
 import re
 
-_REGISTERED: set[int] = set()
-
 _POSIX = {
     "lower": "a-z", "upper": "A-Z", "digit": "0-9",
     "alpha": "a-zA-Z", "alnum": "a-zA-Z0-9", "space": r" \t\r\n\f\v",
@@ -112,9 +110,7 @@ def re2_extract_all(s: str, pat: str, pos: int):
 
 def register(spark) -> None:
     """Register ``__sr_regexp_replace`` / ``__sr_regexp_extract_all``
-    (idempotent per session)."""
-    if id(spark) in _REGISTERED:
-        return
+    into ``spark``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -149,4 +145,3 @@ def register(spark) -> None:
     spark.udf.register("__sr_regexp_replace", __sr_regexp_replace)
     spark.udf.register("__sr_regexp_extract_all",
                        __sr_regexp_extract_all)
-    _REGISTERED.add(id(spark))

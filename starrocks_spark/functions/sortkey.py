@@ -23,8 +23,6 @@ from __future__ import annotations
 
 import struct
 
-_REGISTERED: set[int] = set()
-
 _INT_WIDTH = {"int8": 1, "int16": 2, "int32": 4, "int64": 8,
               "uint8": 1, "uint16": 2, "uint32": 4, "uint64": 8}
 
@@ -117,9 +115,7 @@ def encode_arrays(cols: list) -> "object":
 
 
 def register(spark) -> None:
-    """Register ``__encode_sort_key(*cols) -> binary`` (idempotent)."""
-    if id(spark) in _REGISTERED:
-        return
+    """Register ``__encode_sort_key(*cols) -> binary`` into ``spark``."""
     import math
 
     import pandas as pd
@@ -153,4 +149,3 @@ def register(spark) -> None:
     __sr_dstr = pandas_udf(_dstr, "string", PandasUDFType.SCALAR)
     spark.udf.register("__sr_dstr", __sr_dstr)
     spark.udf.register("__encode_sort_key", __encode_sort_key)
-    _REGISTERED.add(id(spark))

@@ -16,8 +16,6 @@ import re
 
 _BOUNDARY = re.compile(r"(^|[^a-zA-Z0-9])([a-z])")
 
-_REGISTERED: set[int] = set()
-
 
 def sr_initcap(s: str) -> str:
     return _BOUNDARY.sub(lambda m: m.group(1) + m.group(2).upper(),
@@ -25,9 +23,7 @@ def sr_initcap(s: str) -> str:
 
 
 def register(spark) -> None:
-    """Register ``__sr_initcap(str)`` (idempotent per session)."""
-    if id(spark) in _REGISTERED:
-        return
+    """Register ``__sr_initcap(str)`` into ``spark``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -36,4 +32,3 @@ def register(spark) -> None:
         return col.map(lambda v: None if v is None else sr_initcap(str(v)))
 
     spark.udf.register("__sr_initcap", __sr_initcap)
-    _REGISTERED.add(id(spark))

@@ -14,8 +14,6 @@ exercising this leniency go through this Arrow-batched UDF instead.
 import datetime
 import re
 
-_REGISTERED: set[int] = set()
-
 # token → (regex, field) ; fields merged into a datetime
 _TOKENS = {
     "Y": (r"(\d{4})", "year"),
@@ -173,9 +171,7 @@ def parse_mysql_datetime(s: str, fmt: str):
 
 
 def register(spark) -> None:
-    """Register ``__sr_str_to_date(s, fmt)`` (idempotent)."""
-    if id(spark) in _REGISTERED:
-        return
+    """Register ``__sr_str_to_date(s, fmt)`` into ``spark``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -187,4 +183,3 @@ def register(spark) -> None:
             for a, f in zip(s, fmt)])
 
     spark.udf.register("__sr_str_to_date", __sr_str_to_date)
-    _REGISTERED.add(id(spark))

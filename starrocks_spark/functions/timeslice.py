@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import datetime as _dt
 
-_REGISTERED: set[int] = set()
-
 _EPOCH = _dt.datetime(1, 1, 1)
 _FIXED_SECONDS = {"second": 1, "minute": 60, "hour": 3600,
                   "day": 86400, "week": 604800}
@@ -76,8 +74,6 @@ def time_slice(ts, period: int, unit: str, base: str):
 
 
 def register(spark) -> None:
-    if id(spark) in _REGISTERED:
-        return
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -115,4 +111,3 @@ def register(spark) -> None:
         return pa.array(out, pa.string())
 
     spark.udf.register("__sr_time_slice", arrow_udf(_fn, "string"))
-    _REGISTERED.add(id(spark))

@@ -55,14 +55,6 @@ def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def sql_l2_distance(a: str, b: str) -> str:
-    return (
-        f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, "
-        f"[({a}[i]::DOUBLE - {b}[i]::DOUBLE) * ({a}[i]::DOUBLE - {b}[i]::DOUBLE) "
-        f"FOR i IN generate_series(1, len({a}))]), (acc, v) -> acc + v))"
-    )
-
-
 # ---------------------------------------------------------------------------
 # fast literal arrays: one F.expr parse instead of one py4j round trip
 # per element. F.lit is ~1 ms of driver-side py4j per call, so a 16×64
@@ -98,11 +90,6 @@ def lit_double_matrix(rows) -> Column:
         )
         + ")"
     )
-
-
-def lit_longs(xs) -> Column:
-    """array<bigint> literal column — single parse."""
-    return F.expr("array(" + ",".join(f"{int(x)}L" for x in xs) + ")")
 
 
 # ---------------------------------------------------------------------------

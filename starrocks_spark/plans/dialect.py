@@ -32,6 +32,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from starrocks_spark.catalog import register_tables
+from starrocks_spark.functions import register_all
 from starrocks_spark.session import plan_small_statically
 
 # ---------------------------------------------------------------------------
@@ -1497,19 +1498,6 @@ def _rw_get_variant(t: str):
     return fn
 
 
-def _rw_variant_to_json(args: list[str]) -> str | None:
-    """CAST(<variant-expr> AS JSON): the reference renders JSON text
-    with a space after commas; Spark's variant→string is compact."""
-    if len(args) != 1:
-        return None
-    m = re.match(r"^(.*?)\s+AS\s+JSON\s*$", args[0],
-                 re.IGNORECASE | re.DOTALL)
-    if not m:
-        return None
-    return (f"regexp_replace(CAST(({m.group(1).strip()}) AS STRING),"
-            f" ',', ', ')")
-
-
 def _rw_get_variant_time(args: list[str]) -> str | None:
     # Spark's variant has no TIME member; round-trip via string
     if len(args) != 2:
@@ -2973,28 +2961,6 @@ def starrocks_sql(spark: SparkSession, sql: str, sf_dir: str) -> DataFrame:
     execution off when the query's leaf input is below one advisory
     partition, else adaptively (``session.plan_small_statically``).
     """
-    from starrocks_spark.functions import (aesfn, bitmap, datediff,
-                                           hllfn, jodafmt, jsonshape,
-                                           mmh3, mysqlweek, percentile,
-                                           regexfn, sortkey, strcase,
-                                           strtodate, timeslice)
-
     register_tables(spark, sf_dir)
-    strcase.register(spark)
-    percentile.register(spark)
-    strtodate.register(spark)
-    jsonshape.register(spark)
-    regexfn.register(spark)
-    # translate() rewrites murmur_hash3_32 into the __mmh3_32 UDF —
-    # without this registration any murmur query through this public
-    # entry point fails with an unresolved-function error
-    mmh3.register(spark)
-    bitmap.register(spark)
-    sortkey.register(spark)
-    datediff.register(spark)
-    mysqlweek.register(spark)
-    timeslice.register(spark)
-    jodafmt.register(spark)
-    aesfn.register(spark)
-    hllfn.register(spark)
+    register_all(spark)
     return plan_small_statically(spark.sql(translate(sql)))

@@ -942,10 +942,6 @@ def _render_type_tree(node) -> str:
     return f"struct<{inner}>"
 
 
-def _spark_type_of(node, spark_type) -> str:
-    return spark_type(_render_type_tree(node))
-
-
 def _retype_expr(col: str, old, new, spark_type=None) -> str:
     """Spark SQL expression mapping a value of tree ``old`` onto tree
     ``new``: fields present in both carry over by name, new fields

@@ -65,6 +65,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from starrocks_spark.functions import register_all
 from starrocks_spark.plans import dialect
 from starrocks_spark.plans.interceptors import (PRE0, PRE1, PRE2,
                                                 PreDispatch,
@@ -2501,27 +2502,7 @@ class ScriptRunner(PreDispatch):
     supported fraction honestly rather than hiding it."""
 
     def __init__(self, spark: SparkSession, strict: bool = True):
-        from starrocks_spark.functions import (aesfn, bitmap,
-                                               datediff, hllfn,
-                                               jodafmt, jsonshape,
-                                               mmh3, mysqlweek,
-                                               percentile, regexfn,
-                                               sortkey, strcase,
-                                               strtodate, timeslice)
-        sortkey.register(spark)
-        jodafmt.register(spark)
-        aesfn.register(spark)
-        hllfn.register(spark)
-        datediff.register(spark)
-        mysqlweek.register(spark)
-        timeslice.register(spark)
-        mmh3.register(spark)
-        bitmap.register(spark)
-        strcase.register(spark)
-        percentile.register(spark)
-        strtodate.register(spark)
-        jsonshape.register(spark)
-        regexfn.register(spark)
+        register_all(spark)
         self.spark = spark
         self.strict = strict
         dialect.BITMAP_THROW_MODE = False  # fresh session default

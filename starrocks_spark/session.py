@@ -30,8 +30,8 @@ OLAP_CONF: dict[str, str] = {
     # --- adaptive execution: runtime re-planning, skew handling, coalesce
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Size-driven coalescing knobs (r12, guide §2.2), env-parameterised
-    # per the scale-dependent-settings rule. parallelismFirst=false
+    # Size-driven coalescing knobs (r12, guide §2.2); a deployment
+    # overrides them through get_spark(extra_conf=...). parallelismFirst=false
     # makes the advisory byte size govern coalescing (the documented
     # production recommendation: a 100 TB shuffle gets bytes/advisory
     # partitions instead of max-count slivers) — but it was A/B
@@ -40,14 +40,13 @@ OLAP_CONF: dict[str, str] = {
     # shuffles whose rows carry CPU-heavy work (md5 signatures,
     # array_intersect verification) collapse to ONE task and the
     # compute serializes. Byte-driven coalescing misjudges
-    # compute-bound-but-small partitions, so the local default keeps
-    # Spark's stock parallelism-first behaviour and a real deployment
-    # flips SPARK_GRAFT_COALESCE_PARALLELISM_FIRST=false where
-    # partition byte size tracks work. (OPTIMIZATION_r12.md §session)
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-        os.environ.get("SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-        os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
+    # compute-bound-but-small partitions, so the default keeps
+    # Spark's stock parallelism-first behaviour; a real deployment
+    # whose partition byte size tracks work passes
+    # get_spark(extra_conf={<this key>: "false"}).
+    # (OPTIMIZATION_r12.md §session)
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.localShuffleReader.enabled": "true",
     # --- cost-based optimizer + join reorder (reference: Cascades memo)
@@ -73,17 +72,16 @@ OLAP_CONF: dict[str, str] = {
     #     low-core scaling run measure the queries, not the floor).
     #     CPU-heavy scans in this repo (dedup/ANN text+vector stages)
     #     explicitly repartition to full parallelism, so they keep
-    #     their cores either way. Env-overridable for deployments
-    #     whose medium-sized hot tables want a parallelism floor.
+    #     their cores either way.
     #     r13 three-scale A/B (BENCH_NOTES.md "r13: mid-scale"): at
     #     sf0.1 floor=1 wins (bench 145 vs 167 s — fixed-overhead-
     #     bound); in the 10 MB-4 GB band floor=cores wins up to 1.8×
     #     (bytes/128 MB under-parallelizes there); at >= ~4 GB the
     #     settings converge (splits >> cores). Production guidance:
-    #     SPARK_GRAFT_SCAN_MIN_SPLITS=<total executor cores> — the
-    #     stock Spark default — whenever hot tables live in that band.
-    "spark.sql.files.minPartitionNum":
-        os.environ.get("SPARK_GRAFT_SCAN_MIN_SPLITS", "1"),
+    #     get_spark(extra_conf={<this key>: <total executor cores>})
+    #     — the stock Spark default — whenever hot tables live in that
+    #     band.
+    "spark.sql.files.minPartitionNum": "1",
     # --- broadcast threshold: dimension tables up to 64 MB broadcast
     #     (reference CBO picks broadcast joins for small build sides)
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -158,6 +156,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# What the engine installs into a session (table frames, temp views,
+# UDFs) is installed once per session and remembered here, like the
+# reference FE's catalog and FunctionSet. Keyed on the live session
+# OBJECT (`is` check), so a new session (spark.newSession(), or one
+# started after a stop) installs its own. A WeakKeyDictionary would
+# free nothing: the cached frames hold their session.
+_SESSION_MEMOS: dict[int, tuple[SparkSession, dict]] = {}
+
+
+def session_memo(spark: SparkSession) -> dict:
+    """The engine's per-session state dict for ``spark``."""
+    hit = _SESSION_MEMOS.get(id(spark))
+    if hit is None or hit[0] is not spark:
+        hit = _SESSION_MEMOS[id(spark)] = (spark, {})
+    return hit[1]
 
 
 def _seq(jseq) -> list:

@@ -1,7 +1,8 @@
 """Unit tests for the StarRocks→Spark SQL dialect translator
 (plans/dialect.py), mostly string-level, and for the per-query floor of
-its ``starrocks_sql`` entry point: register-once views, static planning
-of small queries, and codegen classes kept per query shape."""
+its ``starrocks_sql`` entry point: register-once views and UDFs,
+static planning of small queries, and codegen classes kept per query
+shape."""
 
 from __future__ import annotations
 
@@ -279,17 +280,16 @@ def _big_sf(sf_dir):
     return big
 
 
-def _view_spy(spark, monkeypatch):
-    """Names passed to createOrReplaceTempView from now on."""
+def _spy(cls, method, monkeypatch):
+    """Names (first arguments) passed to ``cls.method`` from now on."""
     made = []
-    cls = type(spark.range(1))
-    real = cls.createOrReplaceTempView
+    real = getattr(cls, method)
 
-    def spy(self, name):
+    def spy(self, name, *args, **kwargs):
         made.append(name)
-        return real(self, name)
+        return real(self, name, *args, **kwargs)
 
-    monkeypatch.setattr(cls, "createOrReplaceTempView", spy)
+    monkeypatch.setattr(cls, method, spy)
     return made
 
 
@@ -307,7 +307,7 @@ def test_register_tables_registers_each_view_once(spark, sf_dir, monkeypatch):
     big = _big_sf(sf_dir)
     register_tables(spark, big)
     want = {t: _count(spark, t) for t in ("orders", "nation")}
-    made = _view_spy(spark, monkeypatch)
+    made = _spy(type(spark.range(1)), "createOrReplaceTempView", monkeypatch)
     register_tables(spark, big)
     assert made == []
     assert {t: _count(spark, t) for t in want} == want
@@ -330,6 +330,28 @@ def test_register_tables_registers_each_view_once(spark, sf_dir, monkeypatch):
     register_tables(spark, big)
     assert made == TABLES
     assert {t: _count(spark, t) for t in want} == want
+    # starrocks_sql installs views and UDFs once per session: a second
+    # query registers neither. (translate routes initcap to a UDF.)
+    from starrocks_spark.plans.dialect import starrocks_sql
+
+    sql = "SELECT initcap(n_name) AS n FROM nation WHERE n_nationkey = 1"
+    assert "__sr_initcap" in translate(sql)
+    udfs = _spy(type(spark.udf), "register", monkeypatch)
+    starrocks_sql(spark, sql, big)
+    made.clear()
+    udfs.clear()
+    rows = starrocks_sql(spark, sql, big).collect()
+    assert (made, udfs) == ([], [])
+    assert rows[0].n == "Nation_1"
+    # a new session has its own temp views and UDFs, so it installs both
+    other = spark.newSession()
+    assert starrocks_sql(other, sql, big).collect() == rows
+    assert made == TABLES
+    assert "__sr_initcap" in udfs
+    made.clear()
+    udfs.clear()
+    assert starrocks_sql(other, sql, big).collect() == rows
+    assert (made, udfs) == ([], [])
 
 
 def test_starrocks_sql_plans_small_input_statically(spark, sf_dir):

@@ -570,11 +570,9 @@ class DialectGen:
 
 
 def test_fuzz_dialect_rewrite_surface(sparktabs, duck):
-    from starrocks_spark.functions import (mmh3, percentile, regexfn,
-                                           strcase, strtodate)
+    from starrocks_spark.functions import register_all
 
-    for mod in (strcase, percentile, strtodate, regexfn, mmh3):
-        mod.register(sparktabs)
+    register_all(sparktabs)
     seed = int(os.environ.get("SPARK_FUZZ_SEED", "1107"))
     n = int(os.environ.get("SPARK_FUZZ_DIALECT_N", "40"))
     g = DialectGen(random.Random(seed + 1))
