@@ -20,6 +20,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from starrocks_spark import jvm
+
 log = logging.getLogger(__name__)
 
 # Shuffle partition count: on a real cluster this should be ~2-3x total
@@ -85,16 +87,18 @@ OLAP_CONF: dict[str, str] = {
     # --- broadcast threshold: dimension tables up to 64 MB broadcast
     #     (reference CBO picks broadcast joins for small build sides)
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # --- codegen class cache (static, JVM-wide). Spark inlines numeric
-    #     and date literals into generated source, so every fresh-literal
-    #     query adds ~2 classes that are never reused; at the stock 100
-    #     entries they evict the literal-free classes of the recurring
-    #     query shapes, which then compile again. Measured on perfbench
-    #     adhoc_sql seed 1 (8 templates, 4-vCPU VM, local[2]): 5.1 -> 2.3
-    #     Janino compiles per query at ~30 ms each; the process tree's
-    #     peak memory moved within run-to-run noise (median +1.5%).
-    #     4000 entries let ~2,000 fresh-literal queries pass before a
-    #     shape's classes can be evicted again.
+    # --- codegen class cache (static, JVM-wide), keyed on generated
+    #     source. The ParamLiterals strategy (jvm/) keeps comparison
+    #     literals in filter and join conditions out of that source, but
+    #     Spark still inlines numeric and date literals anywhere else
+    #     (projections, aggregates, CASE), so fresh-literal queries keep
+    #     adding classes that are never reused. At the stock 100 entries
+    #     those evict the literal-free classes of the recurring query
+    #     shapes, which then compile again. Measured on perfbench
+    #     adhoc_sql seed 1 (8 templates, 4-vCPU VM, local[2]), Janino
+    #     compiles per query: 5.1 at 100 entries, 2.3 at 4000, 0.27 at
+    #     4000 with ParamLiterals. At 0.27 per query, 4000 entries hold a
+    #     shape's classes through ~15,000 fresh-literal queries.
     "spark.sql.codegen.cache.maxEntries": "4000",
     # --- Arrow for any pandas-UDF path (sketches, ANN, multimodal)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -159,18 +163,24 @@ def get_spark(
 
 
 # What the engine installs into a session (table frames, temp views,
-# UDFs) is installed once per session and remembered here, like the
-# reference FE's catalog and FunctionSet. Keyed on the live session
-# OBJECT (`is` check), so a new session (spark.newSession(), or one
-# started after a stop) installs its own. A WeakKeyDictionary would
-# free nothing: the cached frames hold their session.
+# UDFs, the ParamLiterals planner strategy) is installed once per
+# session and remembered here, like the reference FE's catalog and
+# FunctionSet. Keyed on the live session OBJECT (`is` check), so a new
+# session (spark.newSession(), or one started after a stop) installs
+# its own. A WeakKeyDictionary would free nothing: the cached frames
+# hold their session, so stopped sessions are dropped explicitly.
 _SESSION_MEMOS: dict[int, tuple[SparkSession, dict]] = {}
 
 
 def session_memo(spark: SparkSession) -> dict:
-    """The engine's per-session state dict for ``spark``."""
+    """The engine's per-session state dict for ``spark``; the first
+    call for a session installs the ParamLiterals strategy into it."""
+    for key, (s, _) in list(_SESSION_MEMOS.items()):
+        if s.sparkContext._jsc is None:  # stopped
+            del _SESSION_MEMOS[key]
     hit = _SESSION_MEMOS.get(id(spark))
     if hit is None or hit[0] is not spark:
+        jvm.install(spark)
         hit = _SESSION_MEMOS[id(spark)] = (spark, {})
     return hit[1]
 
