@@ -116,11 +116,11 @@ def pack_sequences(
     )
     # materialize the windowed rows once — the per-bucket totals derive
     # from the SAME pass, so the regex tokenization (the dominant scan
-    # cost at corpus scale) never runs twice. localCheckpoint, not
-    # persist: checkpoint blocks are reclaimed by the ContextCleaner
-    # when the result DataFrame is dropped, whereas a persist() with no
-    # reachable unpersist() pins the tokenized corpus in executor
-    # storage for the application lifetime (one leak per call)
+    # cost at corpus scale) never runs twice. localCheckpoint persists
+    # its RDD just as persist() would, and nothing here unpersists it:
+    # it is freed only when the JVM's ContextCleaner finds the RDD
+    # garbage, not when the result is dropped. Measured at sf0.01: 3
+    # calls in a fresh session grew getPersistentRDDs() 1 -> 2 -> 3
     local = base.withColumn(
         "_local_end", F.sum("n_tok").over(local_w)
     ).localCheckpoint(eager=False)

@@ -13,13 +13,13 @@ exactly how a StarRocks external table joins an OLAP table.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import fixed, sql_fixed
+from starrocks_spark.scratch import scratch_dir
 from starrocks_spark.sources import connector
 
 
@@ -28,8 +28,7 @@ def _db_for(spark: SparkSession, sf_dir: str, tables: list[str]) -> str:
     file (recreated per sf_dir; driver-side, metadata-scale)."""
     import duckdb
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"sr_external_{tag}.duckdb")
+    path = os.path.join(scratch_dir("sr_external", sf_dir), "external.duckdb")
     if os.path.exists(path):
         os.remove(path)
     con = duckdb.connect(path)

@@ -11,7 +11,6 @@ reader are lossless for the exercised types.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +18,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table, register_tables
 from starrocks_spark.queries._util import fixed, sql_dsum, sql_fixed
+from starrocks_spark.scratch import scratch_root
 from starrocks_spark.sources.files import (
     meta_scan,
     read_files,
@@ -28,7 +28,7 @@ from starrocks_spark.sources.files import (
 
 
 def _tmp(prefix: str) -> str:
-    return os.path.join(tempfile.gettempdir(),
+    return os.path.join(scratch_root(),
                         f"sr_files_{prefix}_{uuid.uuid4().hex[:10]}")
 
 

@@ -32,15 +32,13 @@ same write would be bucketed; nothing below assumes local mode.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import dsum, sql_dsum
-
-_WAREHOUSE = "/tmp/sr_spark_warehouse"
+from starrocks_spark.scratch import scratch_dir
 
 
 def _city(nation_col: str, key_col: str) -> F.Column:
@@ -124,26 +122,19 @@ def build_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flat_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized lineorder_flat, built once per sf_dir (mirrors the
-    reference's load-time INSERT INTO lineorder_flat). Partitioned by
-    d_year for pruning; atomic publish via rename + own marker file
-    (Spark's _SUCCESS is unreliable under dynamic partition-overwrite
-    sessions, and relying on it caused a rebuild per query)."""
-    base = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_WAREHOUSE, f"ssb_flat_{base}")
+    """Materialized lineorder_flat, built once per sf_dir and process
+    in its scratch dir (mirrors the reference's load-time INSERT INTO
+    lineorder_flat). Partitioned by d_year for pruning; published by
+    its own marker file, written after the data (Spark's _SUCCESS is
+    unreliable under dynamic partition-overwrite sessions, and relying
+    on it caused a rebuild per query)."""
+    path = scratch_dir("ssb_flat", sf_dir)
     marker = os.path.join(path, "_PUBLISHED")
     if not os.path.exists(marker):
-        os.makedirs(_WAREHOUSE, exist_ok=True)
-        tmp = tempfile.mkdtemp(dir=_WAREHOUSE, prefix=f".ssb_{base}_")
-        stage = os.path.join(tmp, "data")
         build_flat(spark, sf_dir).write.mode("overwrite") \
-            .partitionBy("d_year").parquet(stage)
-        with open(os.path.join(stage, "_PUBLISHED"), "w") as f:
+            .partitionBy("d_year").parquet(path)
+        with open(marker, "w") as f:
             f.write(sf_dir)
-        try:
-            os.rename(stage, path)
-        except OSError:
-            pass  # concurrent builder won the rename; theirs is identical
     return spark.read.parquet(path)
 
 

@@ -45,23 +45,20 @@ def table_agg_keys_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, TableModel.AGG_KEYS, ["user_id", "event_type"],
         agg_spec={"value_f": "sum", "n_events": "sum"},
     )
-    try:
-        for i in range(3):
-            # split on event_id so the SAME key appears in several
-            # rowsets — forces the query-time cross-rowset merge
-            t.insert(prepared.filter(F.col("event_id") % 3 == i))
-        t.compact()  # fold rowsets — read-after must be identical
-        return (
-            t.read()
-            .select(
-                "user_id", "event_type",
-                (F.col("value_f").cast("double") / F.lit(_SCALE))
-                .alias("sum_value"),
-                "n_events",
-            )
+    for i in range(3):
+        # split on event_id so the SAME key appears in several
+        # rowsets — forces the query-time cross-rowset merge
+        t.insert(prepared.filter(F.col("event_id") % 3 == i))
+    t.compact()  # fold rowsets — read-after must be identical
+    return (
+        t.read()
+        .select(
+            "user_id", "event_type",
+            (F.col("value_f").cast("double") / F.lit(_SCALE))
+            .alias("sum_value"),
+            "n_events",
         )
-    finally:
-        pass  # table dir is in /tmp; leave for debugging, OS reaps it
+    )
 
 
 _AGG_KEYS_SQL = f"""

@@ -1,19 +1,17 @@
-"""Per-process scratch space + build-once cache for derived artifacts
-(index tables, managed-table demos).
+"""The one rule for files the engine writes: they go under
+``scratch_root()``, one directory per process that an ``atexit`` hook
+removes after the harness has materialized every result.
 
-Two problems this solves (round-5 advice + verdict):
+Query callables return lazy DataFrames, so a file they write (an index
+table, a FILES() export, a staged stream source, a managed-table demo)
+must outlive the call and cannot be removed inside it. ``scratch_dir``
+gives the directory for one artifact: with ``key`` (e.g. the sf_dir)
+it is one directory per (tag, corpus), so a build-once artifact is
+found again by the same lookup and two corpora never share one.
 
-* Query callables that materialize tables/indexes used to write fresh
-  directories under /tmp on every invocation and could never clean
-  them up (the returned DataFrame is lazy, so in-function removal
-  would race the collect). Everything now lands under ONE per-process
-  root that an ``atexit`` hook removes after the harness has
-  materialized all results.
-* Stored indexes (SQ8 codes, IVF lists, fulltext postings) must be
-  built ONCE per corpus and queried many times — the build/query
-  split the reference gets from its storage-attached indexes
-  (be/src/storage/index/). ``cached`` memoizes the build per process
-  so the second query against the same corpus pays only the read.
+What is built once per SparkSession (the frames over these files) is
+remembered in ``session.session_memo``, not here: a frame is bound to
+the session that made it.
 """
 
 from __future__ import annotations
@@ -23,11 +21,8 @@ import hashlib
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
-from typing import Any
 
 _root: str | None = None
-_cache: dict[Any, Any] = {}
 
 
 def scratch_root() -> str:
@@ -47,10 +42,3 @@ def scratch_dir(tag: str, key: str | None = None) -> str:
     d = os.path.join(scratch_root(), name)
     os.makedirs(d, exist_ok=True)
     return d
-
-
-def cached(key: Any, builder: Callable[[], Any]) -> Any:
-    """Build-once process cache (index artifacts keyed by corpus)."""
-    if key not in _cache:
-        _cache[key] = builder()
-    return _cache[key]

@@ -165,7 +165,10 @@ def get_spark(
 # What the engine installs into a session (table frames, temp views,
 # UDFs, the ParamLiterals planner strategy) is installed once per
 # session and remembered here, like the reference FE's catalog and
-# FunctionSet. Keyed on the live session OBJECT (`is` check), so a new
+# FunctionSet. So are the build-once artifacts' frames
+# (queries/llm_pipeline.py: the signature-pairs table, the fulltext,
+# IVF and SQ8 indexes); their files live under scratch.scratch_root,
+# per process. Keyed on the live session OBJECT (`is` check), so a new
 # session (spark.newSession(), or one started after a stop) installs
 # its own. A WeakKeyDictionary would free nothing: the cached frames
 # hold their session, so stopped sessions are dropped explicitly.

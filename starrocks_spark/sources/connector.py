@@ -28,7 +28,7 @@ Spark-first design (mirrors Spark's own JDBC source surface):
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import uuid
 from dataclasses import dataclass
 
@@ -212,10 +212,13 @@ class DuckDBWriter(DataSourceArrowWriter):
     transaction (DuckDB is single-writer, so the commit is the only
     writer — the same shape as the reference's external sink commit).
 
-    Staging location: ``staging_dir`` option, defaulting to the local
-    tempdir. Single-node that is always visible to commit(); on a
-    multi-node cluster pass a shared filesystem path (the same
-    requirement as any JDBC-ish staged commit protocol).
+    Staging location: ``staging_dir`` option, defaulting to the
+    database file's directory (where DuckDB keeps its WAL; the writer
+    is built in a Python worker process, so the driver's scratch root
+    is not known here). Single-node that is always visible to commit();
+    on a multi-node cluster pass a shared filesystem path (the same
+    requirement as any JDBC-ish staged commit protocol). commit() and
+    abort() remove this write's staging dir.
     """
 
     def __init__(self, options, schema: StructType, overwrite: bool):
@@ -223,7 +226,7 @@ class DuckDBWriter(DataSourceArrowWriter):
         self.table = options["table"]
         self.overwrite = overwrite
         self.stage_dir = os.path.join(
-            options.get("staging_dir") or tempfile.gettempdir(),
+            options.get("staging_dir") or os.path.dirname(self.path),
             f"duck_sink_{uuid.uuid4().hex[:12]}",
         )
         os.makedirs(self.stage_dir, exist_ok=True)
@@ -253,26 +256,25 @@ class DuckDBWriter(DataSourceArrowWriter):
         import duckdb
 
         files = [m.path for m in messages if m.rows]
-        if not files:
-            return
         lst = "[" + ", ".join(_sql_lit(f) for f in files) + "]"
-        con = duckdb.connect(self.path)
         try:
-            if self.overwrite:
-                con.execute(
-                    f"CREATE OR REPLACE TABLE {self.table} AS "
-                    f"SELECT * FROM read_parquet({lst})"
-                )
-            else:
-                con.execute(
-                    f"INSERT INTO {self.table} BY NAME "
-                    f"SELECT * FROM read_parquet({lst})"
-                )
+            if files:
+                with duckdb.connect(self.path) as con:
+                    if self.overwrite:
+                        con.execute(
+                            f"CREATE OR REPLACE TABLE {self.table} AS "
+                            f"SELECT * FROM read_parquet({lst})"
+                        )
+                    else:
+                        con.execute(
+                            f"INSERT INTO {self.table} BY NAME "
+                            f"SELECT * FROM read_parquet({lst})"
+                        )
         finally:
-            con.close()
+            self.abort(messages)
 
     def abort(self, messages):
-        pass
+        shutil.rmtree(self.stage_dir, ignore_errors=True)
 
 
 class DuckDBDataSource(DataSource):

@@ -33,14 +33,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from starrocks_spark.scratch import scratch_dir, scratch_root
 from starrocks_spark.tables.storage import part_file_bytes
 
 log = logging.getLogger(__name__)
 
-# Spark's file stream source watches a *directory* (new file = new data,
-# like new Kafka offsets). The testdata tables are single parquet files,
-# so stage each behind a symlink in a per-source temp dir.
-_STAGE_DIRS: dict[str, str] = {}
+# Target state bytes per state-store instance: the HDFSBackedStateStore
+# comfort zone (see state_partitions_for).
+STATE_STORE_BYTES = 100 << 20
 
 
 def _ts_to_timestamp(stream: DataFrame) -> DataFrame:
@@ -58,11 +58,13 @@ def _ts_to_timestamp(stream: DataFrame) -> DataFrame:
 
 
 def _staged_dir(parquet_file: str) -> str:
-    stage = _STAGE_DIRS.get(parquet_file)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="sr_spark_stream_src_")
-        os.symlink(parquet_file, os.path.join(stage, os.path.basename(parquet_file)))
-        _STAGE_DIRS[parquet_file] = stage
+    """Spark's file stream source watches a *directory* (new file = new
+    data, like new Kafka offsets). The testdata tables are single
+    parquet files, so stage each behind a symlink in its scratch dir."""
+    stage = scratch_dir("stream_src", parquet_file)
+    link = os.path.join(stage, os.path.basename(parquet_file))
+    if not os.path.lexists(link):
+        os.symlink(parquet_file, link)
     return stage
 
 
@@ -84,23 +86,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     return _ts_to_timestamp(stream)
 
 
-_SPLIT_DIRS: dict[tuple[str, int], str] = {}
-
-
 def read_events_stream_split(spark: SparkSession, sf_dir: str,
                              n_splits: int = 3) -> DataFrame:
     """Like read_events_stream, but the backlog is split into
     ``n_splits`` files consumed one per micro-batch — real multi-batch
     arrival for stateful-operator tests (each batch ≈ one Kafka offset
     range commit)."""
-    key = (sf_dir, n_splits)
-    split_dir = _SPLIT_DIRS.get(key)
+    split_dir = scratch_dir(f"stream_split{n_splits}", sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if split_dir is None or not os.path.isdir(split_dir):
-        split_dir = tempfile.mkdtemp(prefix="sr_spark_stream_split_")
+    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
         spark.read.parquet(f"{sf_dir}/events.parquet") \
             .repartition(n_splits).write.mode("overwrite").parquet(split_dir)
-        _SPLIT_DIRS[key] = split_dir
     schema = spark.read.parquet(split_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -124,8 +120,8 @@ def state_partitions_for(spark: SparkSession, sf_dir: str,
     share of the source a query actually keeps — watermarked join
     buffers and window aggregates keep far less than 1.0; 1.0 is the
     conservative whole-source bound), divided by the per-store target
-    (~100 MB, the HDFSBackedStateStore comfort zone; env-overridable
-    via SPARK_GRAFT_STATE_STORE_BYTES), clamped to the cluster's
+    (``STATE_STORE_BYTES``, 100 MiB, the HDFSBackedStateStore comfort
+    zone), clamped to the cluster's
     parallelism. At sf0.1 (2 MB events) every streaming query gets 1
     store; a 100 TB source gets bytes/100 MB stores capped at the
     core count.
@@ -134,8 +130,7 @@ def state_partitions_for(spark: SparkSession, sf_dir: str,
     Spark-written directory); a path that does not resolve to a local
     file or directory raises rather than sizing the state as 0 bytes.
     The inputs and the result are logged."""
-    per_store = int(os.environ.get("SPARK_GRAFT_STATE_STORE_BYTES",
-                                   str(100 << 20)))
+    per_store = STATE_STORE_BYTES
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
     raw = part_file_bytes(path)
     est_state = raw * 4.0 * state_fraction  # parquet→row decompression
@@ -165,7 +160,7 @@ def run_stream_to_memory(stream_df: DataFrame, output_mode: str = "complete",
     100 TB you raise it; the knob, not the default, is the design."""
     spark = stream_df.sparkSession
     sink = name or f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="sr_spark_ckpt_")
+    ckpt = tempfile.mkdtemp(prefix="sr_spark_ckpt_", dir=scratch_root())
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         if state_partitions is not None:
@@ -258,7 +253,6 @@ def upsert_stream_into_snapshot(stream_df: DataFrame, key_col: str,
     merge-on-write in be/src/storage/). Returns the SnapshotTable
     after the backlog is drained — commit history preserved, older
     snapshots readable."""
-    from starrocks_spark.scratch import scratch_root
     from starrocks_spark.tables.lakehouse import SnapshotTable
 
     spark = stream_df.sparkSession
@@ -266,7 +260,7 @@ def upsert_stream_into_snapshot(stream_df: DataFrame, key_col: str,
         spark, tempfile.mkdtemp(prefix="sr_spark_pk_table_",
                                 dir=scratch_root())
     )
-    ckpt = tempfile.mkdtemp(prefix="sr_spark_ckpt_")
+    ckpt = tempfile.mkdtemp(prefix="sr_spark_ckpt_", dir=scratch_root())
     try:
         q = (
             stream_df.writeStream.foreachBatch(

@@ -4,8 +4,6 @@ clause generation, partition planning, and scan round-trip."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 import duckdb
 import pytest
@@ -15,18 +13,15 @@ from starrocks_spark.sources.connector import DuckDBReader, _duck_schema
 
 
 @pytest.fixture()
-def duck_db():
-    path = os.path.join(
-        tempfile.gettempdir(), f"test_conn_{uuid.uuid4().hex[:8]}.duckdb"
-    )
+def duck_db(tmp_path):
+    path = str(tmp_path / "test_conn.duckdb")
     con = duckdb.connect(path)
     con.execute(
         "CREATE TABLE t AS SELECT range AS k, 'v' || (range % 3) AS v "
         "FROM range(100)"
     )
     con.close()
-    yield path
-    os.remove(path)
+    return path
 
 
 def test_schema_discovery(duck_db):
@@ -73,3 +68,17 @@ def test_scan_roundtrip_with_pushdown(spark, duck_db):
     )
     rows = sorted(r["k"] for r in df.collect())
     assert rows == [k for k in range(30) if k % 3 == 0]
+
+
+def test_sink_removes_its_staging_dir(spark, duck_db, tmp_path):
+    """A sink write stages parquet parts beside the database file by
+    default; the commit loads them and removes the staging dir."""
+    from starrocks_spark.sources import connector
+
+    connector.register(spark)
+    spark.range(10).selectExpr("id AS k", "'w' AS v").write \
+        .format("duckdb").mode("append") \
+        .option("path", duck_db).option("table", "t").save()
+    assert os.listdir(tmp_path) == ["test_conn.duckdb"]
+    with duckdb.connect(duck_db) as con:
+        assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 110

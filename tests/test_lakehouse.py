@@ -5,21 +5,18 @@ vacuum."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from starrocks_spark.tables.lakehouse import SnapshotTable
 
 
-def _table(spark):
-    return SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="lakehouse_", dir="/tmp")
-    )
+def _table(spark, tmp_path):
+    return SnapshotTable(spark, str(tmp_path / "lakehouse"))
 
 
-def test_append_overwrite_time_travel(spark):
-    t = _table(spark)
+def test_append_overwrite_time_travel(spark, tmp_path):
+    t = _table(spark, tmp_path)
     df = spark.range(0, 100).select("id", (F.col("id") % 3).alias("g"))
 
     v0 = t.overwrite(df.filter(F.col("id") < 40))
@@ -35,10 +32,10 @@ def test_append_overwrite_time_travel(spark):
     assert ops == ["overwrite", "append", "overwrite"]
 
 
-def test_commit_log_is_source_of_truth_not_directory_listing(spark):
+def test_commit_log_is_source_of_truth_not_directory_listing(spark, tmp_path):
     """A stray parquet dropped into the data layout must be invisible
     to readers (the log's file list governs)."""
-    t = _table(spark)
+    t = _table(spark, tmp_path)
     t.overwrite(spark.range(0, 10).select("id"))
     stray_dir = os.path.join(t.path, "data_stray000000")
     os.makedirs(stray_dir)
@@ -47,10 +44,10 @@ def test_commit_log_is_source_of_truth_not_directory_listing(spark):
     assert t.read().count() == 10
 
 
-def test_optimistic_version_collision_retries(spark):
+def test_optimistic_version_collision_retries(spark, tmp_path):
     """Two writers publishing concurrently get distinct versions and
     both commits survive (os.link put-if-absent protocol)."""
-    t = _table(spark)
+    t = _table(spark, tmp_path)
     t.overwrite(spark.range(0, 5).select("id"))
     # simulate the race: pre-occupy the version the next commit will
     # try, so _publish must retry at the following number
@@ -68,8 +65,8 @@ def test_optimistic_version_collision_retries(spark):
     assert t.read(0).count() == 5  # original snapshot still readable
 
 
-def test_expire_and_vacuum_reclaims_only_dead_files(spark):
-    t = _table(spark)
+def test_expire_and_vacuum_reclaims_only_dead_files(spark, tmp_path):
+    t = _table(spark, tmp_path)
     t.overwrite(spark.range(0, 50).select("id"))
     t.overwrite(spark.range(0, 20).select("id"))   # v0's files now dead
     assert t.vacuum() == 0                         # v0 still referenced
@@ -78,8 +75,8 @@ def test_expire_and_vacuum_reclaims_only_dead_files(spark):
     assert t.read().count() == 20                  # latest intact
 
 
-def test_compact_preserves_data_and_versions(spark):
-    t = _table(spark)
+def test_compact_preserves_data_and_versions(spark, tmp_path):
+    t = _table(spark, tmp_path)
     for lo in (0, 30, 60):
         t.append(spark.range(lo, lo + 30).select("id"))
     n_files_before = len(t.snapshot().files)
@@ -90,14 +87,12 @@ def test_compact_preserves_data_and_versions(spark):
     assert t.read(v - 1).count() == 90  # pre-compaction snapshot intact
 
 
-def test_schema_evolution_add_column_and_type_guard(spark):
-    import tempfile
-
+def test_schema_evolution_add_column_and_type_guard(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from starrocks_spark.tables.lakehouse import SnapshotTable
 
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="lh_ev_"))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.range(5).select(F.col("id").alias("k"),
                                       F.lit("x").alias("s")))
     t.append(spark.range(5, 8).select(
@@ -120,14 +115,12 @@ def test_schema_evolution_add_column_and_type_guard(spark):
     assert set(t.read().columns) == {"k", "s", "extra"}
 
 
-def test_zonemap_pruning_counts_and_edge_cases(spark):
-    import tempfile
-
+def test_zonemap_pruning_counts_and_edge_cases(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from starrocks_spark.tables.lakehouse import SnapshotTable
 
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="lh_zm2_"))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
     t.overwrite(
         spark.range(0, 1000).select(F.col("id").alias("k"))
         .repartitionByRange(4, F.col("k"))
@@ -155,18 +148,16 @@ def test_zonemap_pruning_counts_and_edge_cases(spark):
     assert t.last_files_scanned == n_files  # correctness over pruning
 
 
-def test_zonemaps_survive_append(spark):
+def test_zonemaps_survive_append(spark, tmp_path):
     """Regression (code-review finding): an append must CARRY the
     previous snapshot's zone maps for its retained files — rebuilding
     only from the new files' footers silently blanked old stats and
     disabled pruning for every pre-append file."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from starrocks_spark.tables.lakehouse import SnapshotTable
 
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="lh_zma_"))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.range(0, 100).select(F.col("id").alias("k"))
                 .repartitionByRange(2, F.col("k")))
     t.append(spark.range(1000, 1100).select(F.col("id").alias("k"))

@@ -10,6 +10,7 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
+from starrocks_spark.streaming import ingest
 from starrocks_spark.streaming.ingest import _merge_batch, state_partitions_for
 from starrocks_spark.tables.lakehouse import SnapshotTable
 from starrocks_spark.tables.storage import part_file_bytes
@@ -90,7 +91,7 @@ def test_state_partitions_sized_from_directory_part_files(
         .repartition(3).write.parquet(src)
     raw = part_file_bytes(src)
     assert raw > 20000
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE_BYTES", str(raw))
+    monkeypatch.setattr(ingest, "STATE_STORE_BYTES", raw)
     with caplog.at_level(logging.INFO, logger="starrocks_spark.streaming.ingest"):
         n = state_partitions_for(spark, str(tmp_path))
     assert n == min(4, par) > 1
